@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs the full battery on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. An untimed warm-up pass absorbs session/JIT
   * startup; each query is then measured SPARK_GRAFT_PASSES times
@@ -123,42 +121,35 @@ object Bench {
     } catch { case _: Exception => Map.empty }
   }
 
+  /** Calibration, wall and process-CPU fields, shared by the stdout
+    * line and the file. */
+  private[graft] def noiseFields(calibBefore: Double, calibAfter: Double,
+                                 wallSec: Double, cpuSec: Double): String =
+    f""""calib_before":$calibBefore%.3f,"calib_after":$calibAfter%.3f,"wall_sec":$wallSec%.3f,"process_cpu_sec":$cpuSec%.3f,"cpu_wall_ratio":${cpuSec / wallSec}%.2f"""
+
+  /** The stdout line: totals, failures, `noise` ([[noiseFields]]) and
+    * sf — never a per-entry map. It is read back from the sbt log
+    * tail; while it carried the 179-entry medians map it was cut
+    * mid-map and never parsed ("parsed": null in every BENCH_r*.json).
+    * Every per-entry map lives only in the bench_out.json file, where
+    * [[baselineMedians]] reads the medians back. */
+  private[graft] def stdoutLine(total: Double, totalMin: Double,
+                                failed: Seq[String], remeasuredN: Int,
+                                noise: String, sfDir: String): String = {
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    f"""{"metric":"total","value":$total%.3f,"unit":"sec","total_min":$totalMin%.3f,"failed":$failedJson,"remeasured_n":$remeasuredN,$noise,"sf":"$sfDir"}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // Materialize EVERY output column (count() would let Catalyst prune
-    // the computed columns away and under-measure).
-    def exec(name: String): Unit =
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.mode("overwrite").format("noop").save()
+    val spark = Harness.session(32)
+    def exec(name: String): Unit = Harness.exec(SparkEntry.queries(name)(spark, sfDir))
+    import Harness.medianOf
 
     val osBean = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-    def medianOf(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2)
-      else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-    }
-    // fixed calibration probe: engine-independent arithmetic over an
-    // in-memory range — no IO, no shuffle, byte-identical work every
-    // round, so its wall time moves ONLY with host contention
-    def calibrate(): Double = medianOf((1 to 3).map { _ =>
-      val t0 = System.nanoTime()
-      spark.range(0, 50000000L, 1, cpus.toInt)
-        .selectExpr("sum(id * 2 + 1)").collect()
-      (System.nanoTime() - t0) / 1e9
-    })
 
     // untimed warm-up: EVERY entry once (round-19, verdict item #2) —
     // build-once /tmp artifacts (dict stores, WARC fixtures, persisted
@@ -171,7 +162,7 @@ object Bench {
       try exec(q) catch { case _: Throwable => () }
     }
 
-    val calibBefore = calibrate()
+    val calibBefore = Harness.calibrate(spark)
     val wall0 = System.nanoTime()
     val cpu0 = osBean.getProcessCpuTime
 
@@ -269,7 +260,7 @@ object Bench {
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val wallSec = (System.nanoTime() - wall0) / 1e9
     val cpuSec = (osBean.getProcessCpuTime - cpu0) / 1e9
-    val calibAfter = calibrate()
+    val calibAfter = Harness.calibrate(spark)
     // per-entry PlanLint ERROR counts + shuffle-exchange counts next
     // to the latencies: a plan regression (new cartesian, oversized
     // broadcast, a quietly-added extra shuffle) becomes
@@ -315,16 +306,9 @@ object Bench {
       java.nio.file.Files.writeString(java.nio.file.Paths.get(p),
         graft.plans.ExchangeBudget.render(actualMap))
     }
-    val noise = f""""calib_before":$calibBefore%.3f,"calib_after":$calibAfter%.3f,"wall_sec":$wallSec%.3f,"process_cpu_sec":$cpuSec%.3f,"cpu_wall_ratio":${cpuSec / wallSec}%.2f"""
-    // STDOUT gets a SHORT line: the driver captures it from the sbt
-    // log tail, and two rounds' records were destroyed when a long
-    // line truncated mid-map ("parsed": null). Medians + totals +
-    // validity evidence fit comfortably; everything per-entry beyond
-    // the medians (min-of-passes, CPU, lint, exchange counts, budget
-    // diff) lives ONLY in the file, which log capture cannot truncate.
-    val shortJson = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"total_min":$totalMin%.3f,"failed":$failedJson,"remeasured_n":${toRecheck.size},$noise,"sf":"$sfDir"}"""
+    val noise = noiseFields(calibBefore, calibAfter, wallSec, cpuSec)
     val fullJson = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"queries_min":$qsMin,"queries_cpu":$qsCpu,"lint_errors":$lintCounts,"exchange_counts":$exchangeCounts,"exchange_over_budget":$overJson,"exchange_unbudgeted":$unbudgetedJson,"exchange_budget_stale":$staleJson,"remeasured":$remeasuredJson,"total_min":$totalMin%.3f,"failed":$failedJson,$noise,"sf":"$sfDir"}"""
-    println(shortJson)
+    println(stdoutLine(total, totalMin, failed.toSeq, toRecheck.size, noise, sfDir))
     java.nio.file.Files.writeString(outPath, fullJson + "\n")
     spark.stop()
     // opt-in CI gate: a quietly-added shuffle must be able to FAIL a

@@ -268,15 +268,7 @@ object SemanticDrift {
     val outJson = args.lift(1).getOrElse("SEMANTIC_DRIFT.json")
     val numPairs = args.lift(2).map(_.toInt).getOrElse(400)
     val seed = args.lift(3).map(_.toLong).getOrElse(1335L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(32)
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val deltas = Seq(0.0, 0.25, 0.5, 1.0, 2.0)
     val pts = measure(spark, emb, numPairs, seed, deltas)

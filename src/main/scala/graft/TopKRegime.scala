@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Measure the sidecar threshold top-k in BOTH of its cost-gate
   * regimes (round-14, VERDICT item 2): the gate
   * (`spark.graft.topk.threshold = auto`) routes ORDER BY + LIMIT to
@@ -19,22 +17,8 @@ import org.apache.spark.sql.SparkSession
 object TopKRegime {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    import org.apache.spark.sql.functions.col
-
-    def medianOf(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-    }
-    def calibrate(): Double = medianOf((1 to 3).map { _ =>
-      val t0 = System.nanoTime()
-      spark.range(0, 50000000L, 1, 32).selectExpr("sum(id * 2 + 1)").collect()
-      (System.nanoTime() - t0) / 1e9
-    })
+    val spark = Harness.session(32)
+    import Harness.medianOf
 
     // the battery's dict store quads (customer + nation/region) over
     // the given corpus, disk-cached like the SparkEntry fixture
@@ -67,7 +51,7 @@ object TopKRegime {
 
     // (regime name, autoBroadcastJoinThreshold value)
     val regimes = Seq("broadcast" -> "512m", "shuffle" -> "-1")
-    val calibBefore = calibrate()
+    val calibBefore = Harness.calibrate(spark)
     val results = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val autoPicks = scala.collection.mutable.LinkedHashMap.empty[String, String]
     for ((regime, bt) <- regimes) {
@@ -81,11 +65,9 @@ object TopKRegime {
         for (mode <- Seq("always", "never")) {
           spark.conf.set("spark.graft.topk.threshold", mode)
           // untimed warm pass (codegen, footers)
-          store.sparql(prologue + q).write.mode("overwrite").format("noop").save()
+          Harness.exec(store.sparql(prologue + q))
           val t = medianOf((1 to 3).map { _ =>
-            val t0 = System.nanoTime()
-            store.sparql(prologue + q).write.mode("overwrite").format("noop").save()
-            (System.nanoTime() - t0) / 1e9
+            Harness.seconds(Harness.exec(store.sparql(prologue + q)))
           })
           results(s"$regime.$qn.$mode") = math.rint(t * 1000) / 1000
         }
@@ -93,7 +75,7 @@ object TopKRegime {
       spark.conf.unset("spark.graft.topk.threshold")
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
-    val calibAfter = calibrate()
+    val calibAfter = Harness.calibrate(spark)
 
     // the gate is correct when auto's pick is not slower than the
     // alternative in its regime (ties are fine — both plans cut

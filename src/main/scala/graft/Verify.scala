@@ -9,7 +9,7 @@ import java.nio.file.{Files, Paths}
   * nonzero like Bench. */
 object Verify {
   /** Dump `SparkEntry.oracleSql` as `outDir/oracle_sql.json` — shared
-    * with the [[VerifyOne]] dev main so the two cannot diverge.
+    * with [[Probe]]'s `verify` mode so the two cannot diverge.
     * JSON string escape covers backslash, quote, and ALL control chars
     * (<0x20) — a tab or CR in builder-authored SQL would otherwise make
     * the driver's json.load fail and silently zero the round's
@@ -33,15 +33,7 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(4)
     val failed = run(spark, sfDir, outDir)
     spark.stop()
     if (failed.nonEmpty) {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** One-command scale sweep: replay the FULL battery against the
   * DuckDB oracle at a larger scale factor than the per-round
   * correctness gate runs at. Exact-replay oracles can silently narrow
@@ -26,15 +24,7 @@ object VerifyAtSf {
     val outDir = args.lift(1).getOrElse(
       java.nio.file.Files.createTempDirectory("graft-scale-sweep").toString)
     val report = args.lift(2).getOrElse("scale_check.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(32)
     // optional 4th+ args: restrict the sweep to a named entry subset
     // (used by the self-generated 10× regime sweep, where only the
     // scale-sensitive entries are re-checked)

@@ -108,7 +108,8 @@ final class DictStore private (val spark: SparkSession,
     * forms and result schemas match [[Sparql.QuadsOps.sparql]].
     * FROM / FROM NAMED apply as a pre-transform of the LONG quad
     * table ([[withDataset]]), so dataset-scoped queries keep the full
-    * fast path. */
+    * fast path. DESCRIBE runs on [[decodedQuads]] without the fast
+    * path, as [[Sparql.QuadsOps.sparql]] would. */
   def sparql(query: String): DataFrame = SparqlParser.parseAny(query) match {
     case SparqlParser.SelectQuery(op, ds) =>
       val st = withDataset(ds)
@@ -120,7 +121,9 @@ final class DictStore private (val spark: SparkSession,
       val st = withDataset(ds)
       Compiler.runConstruct(st.decodedQuads, template,
         st.rewrite(BgpOptimizer.optimize(op, stats)))
-    case _ => Sparql.QuadsOps(decodedQuads).sparql(query)
+    case SparqlParser.DescribeQuery(targets, star, op, ds) =>
+      Compiler.runDescribe(Sparql.applyDataset(decodedQuads, ds), targets, star,
+        op.map(BgpOptimizer.optimize(_, None)))
   }
 
   /** The dataset-scoped view of this store: [[Sparql.applyDataset]]'s
@@ -1720,10 +1723,13 @@ final class DictStore private (val spark: SparkSession,
 
 object DictStore {
 
+  /** Target size of one store file: see [[sizedParts]]. */
+  private val TargetFileBytes = 128L * 1024 * 1024
+
   /** Scale-adaptive write partition count for the PLAIN store layouts
-    * (round-20, guide §6): size output files toward
-    * `spark.graft.store.targetFileBytes` (default 128 MB) using the
-    * optimizer's size estimate, clamped to [1, shuffle.partitions].
+    * (round-20, guide §6): size output files toward [[TargetFileBytes]]
+    * using the optimizer's size estimate, clamped to
+    * [1, shuffle.partitions].
     * A fixed `shuffle.partitions`-way write scattered a 6 MB store
     * over 32 ~180 KB files of ~12 row groups each; every later scan
     * then paid 32 tasks x per-task reader setup x 12 per-row-group
@@ -1734,12 +1740,9 @@ object DictStore {
     * bucket count is the layout contract that buys shuffle-free
     * joins. */
   private def sizedParts(df: DataFrame): Int = {
-    val spark = df.sparkSession
-    val target = spark.conf.getOption("spark.graft.store.targetFileBytes")
-      .map(_.toLong).getOrElse(128L * 1024 * 1024)
-    val cap = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val cap = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val n = est / target + (if (est % target == 0) 0 else 1)
+    val n = est / TargetFileBytes + (if (est % TargetFileBytes == 0) 0 else 1)
     if (n < 1) 1 else if (n > cap) cap else n.toInt
   }
 

@@ -510,13 +510,8 @@ object Compiler {
     * fresh node per solution (shared within the solution). */
   def runConstruct(quads: DataFrame, template: List[(VarOrTerm, VarOrTerm, VarOrTerm)],
                    op: Op): DataFrame = {
-    import graft.rdf.TermKind
-    val c = new Compiler(quads)
-    val bindings0 = c.compile(op)
-    val needsBnode = template.exists(t => Seq(t._1, t._2, t._3).exists {
-      case V(n) => n.startsWith("_anonbn_")
-      case _ => false
-    })
+    val bindings0 = new Compiler(quads).compile(op)
+    val needsBnode = hasTemplateBnode(template)
     // One select per template triple consumes `bindings`: materialize it
     // so (a) the WHERE plan executes once, not per triple, and (b) the
     // per-solution uuid() is FROZEN — re-execution would re-draw it and
@@ -527,25 +522,7 @@ object Compiler {
     val bindings =
       if (needsBnode || template.size > 1) bindings1.localCheckpoint(eager = false)
       else bindings1
-    val ec = new ExprCompiler(n =>
-      if (bindings.columns.contains(n)) bindings(n) else TermFns.nullTerm)
-    def resolve(x: VarOrTerm): Column = x match {
-      case V(n) if n.startsWith("_anonbn_") => // fresh bnode per solution
-        TermFns.bnodeTerm(concat(lit(n.stripPrefix("_anonbn_") + "-"), col("__sol")))
-      case V(n) =>
-        if (bindings.columns.contains(n)) bindings(n) else TermFns.nullTerm
-      case T(t) => ec.termCol(t)
-    }
-    val parts = template.map { case (s, p, o) =>
-      val (sc, pc, oc) = (resolve(s), resolve(p), resolve(o))
-      bindings
-        .select(sc.as("s"), pc.as("p"), oc.as("o"),
-          lit(null).cast(TermSchema.termType).as("g"))
-        .filter(col("s").isNotNull && col("p").isNotNull && col("o").isNotNull &&
-          col("s").getField("kind") =!= TermKind.LITERAL &&
-          col("p").getField("kind") === TermKind.IRI)
-    }
-    parts.reduce(_ union _).dropDuplicates()
+    instantiate(bindings, template).dropDuplicates()
   }
 
   /** CONSTRUCT over a STREAMING quads DataFrame: the same template
@@ -560,15 +537,28 @@ object Compiler {
   def runConstructStream(quads: DataFrame,
                          template: List[(VarOrTerm, VarOrTerm, VarOrTerm)],
                          op: Op): DataFrame = {
-    import graft.rdf.TermKind
-    require(!template.exists(t => Seq(t._1, t._2, t._3).exists {
+    require(!hasTemplateBnode(template), "blank-node CONSTRUCT templates are not streamable")
+    instantiate(new Compiler(quads).compile(op), template)
+  }
+
+  private def hasTemplateBnode(template: List[(VarOrTerm, VarOrTerm, VarOrTerm)]): Boolean =
+    template.exists(t => Seq(t._1, t._2, t._3).exists {
       case V(n) => n.startsWith("_anonbn_")
       case _ => false
-    }), "blank-node CONSTRUCT templates are not streamable")
-    val bindings = new Compiler(quads).compile(op)
+    })
+
+  /** The union of one select per template triple over `bindings`,
+    * keeping only well-formed triples (all positions bound, no literal
+    * subject, IRI predicate). Blank-node labels read the per-solution
+    * `__sol` column [[runConstruct]] adds. */
+  private def instantiate(bindings: DataFrame,
+                          template: List[(VarOrTerm, VarOrTerm, VarOrTerm)]): DataFrame = {
+    import graft.rdf.TermKind
     val ec = new ExprCompiler(n =>
       if (bindings.columns.contains(n)) bindings(n) else TermFns.nullTerm)
     def resolve(x: VarOrTerm): Column = x match {
+      case V(n) if n.startsWith("_anonbn_") => // fresh bnode per solution
+        TermFns.bnodeTerm(concat(lit(n.stripPrefix("_anonbn_") + "-"), col("__sol")))
       case V(n) =>
         if (bindings.columns.contains(n)) bindings(n) else TermFns.nullTerm
       case T(t) => ec.termCol(t)

@@ -667,6 +667,29 @@ class DictStoreSpec extends SparqlSpecBase {
         |{ ?x foaf:name ?name }""".stripMargin)
   }
 
+  it should "answer DESCRIBE like the decoded quads, with and without FROM" in {
+    val st = store("graphs.trig")
+    val prologue = "PREFIX dc: <http://purl.org/dc/elements/1.1/>\n" +
+      "PREFIX foaf: <http://xmlns.com/foaf/0.1/>\n"
+    Seq(
+      """DESCRIBE ?g { ?g dc:publisher "Bob" }""" -> true,
+      """DESCRIBE ?x FROM <tag:example.org,2005-06-06:graph1>
+        |{ ?x foaf:mbox ?m }""".stripMargin -> true,
+      """DESCRIBE * FROM <tag:graph3> FROM NAMED <tag:graph4>
+        |{ ?s ?p ?o }""".stripMargin -> true,
+      """DESCRIBE ?x FROM <http://example.org/nowhere>
+        |{ ?x foaf:name ?n }""".stripMargin -> false
+    ).foreach { case (q, nonEmpty) =>
+      withClue(q) {
+        val viaStore = st.sparql(prologue + q)
+        val viaTerms = st.decode().sparql(prologue + q)
+        viaStore.exceptAll(viaTerms).count() shouldBe 0
+        viaTerms.exceptAll(viaStore).count() shouldBe 0
+        (viaTerms.count() > 0) shouldBe nonEmpty
+      }
+    }
+  }
+
   it should "join a fully-defined VALUES probe list in id space" in {
     val st = store("group_by.ttl")
     val q =
